@@ -11,7 +11,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * the seconds actually go to, without the UI.
   *
   * Usage: Profile <sfDir> <ignored> <namePatterns>   (run_verify.sh shape)
-  * Output: per-query total + a per-job table on stdout; gaps between jobs
+  * Output: per-query total, the `forkAndExec samples:` count (10 ms
+  * samples of any thread inside a process fork, with the top fork sites),
+  * the top sampled frames and a per-job table on stdout; gaps between jobs
   * (driver-side work: commit JSON I/O, footer reads, planning) show up as
   * the difference between the query wall and the summed job time.
   */
@@ -59,6 +61,11 @@ object Profile {
       // I/O, planning) that the job listener cannot see
       val qThread = Thread.currentThread()
       val samples = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+      // samples of ANY thread (task threads included) caught inside a
+      // process fork, by fork site: the first caller outside the JDK and
+      // Hadoop's shell helpers, then the innermost graft frame
+      val forks = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+      val shell = Seq("java.", "org.apache.hadoop.util.", "org.apache.hadoop.fs.FileUtil")
       @volatile var sampling = true
       val sampler = new Thread(() => {
         def sig(st: Array[StackTraceElement], tag: String): Option[String] = {
@@ -86,6 +93,14 @@ object Profile {
           // off the query thread, which only waits in processAllAvailable
           import scala.jdk.CollectionConverters._
           Thread.getAllStackTraces.asScala.foreach { case (t, st) =>
+            if (st.exists(f => f.getMethodName == "forkAndExec" &&
+                f.getClassName == "java.lang.ProcessImpl")) {
+              val site = Seq(st.find(f => !shell.exists(f.getClassName.startsWith)),
+                  st.find(_.getClassName.startsWith("graft.")))
+                .flatten.map(f => s"${f.getClassName.split('.').last}.${f.getMethodName}")
+                .distinct.mkString("<-")
+              forks.merge(site, 1, (a, b) => a + b)
+            }
             val n = t.getName
             if ((t ne qThread) && (t ne Thread.currentThread()) &&
                 !n.startsWith("Executor task launch") && !n.contains("dispatcher") &&
@@ -107,6 +122,9 @@ object Profile {
       val rows = order.asScala.toSeq.flatMap(id => Option(jobs.get(id)))
       val jobSum = rows.collect { case r if r.finished > 0 => (r.finished - r.submitted) / 1e3 }.sum
       println(f"== $name  wall=$wall%.3fs  jobs=${rows.size}  jobSum=$jobSum%.3fs  driverGap=${wall - jobSum}%.3fs  codegenCompiles=$cgn")
+      val forkSites = forks.asScala.toSeq.sortBy(-_._2)
+      println(s"   forkAndExec samples: ${forkSites.map(_._2.toInt).sum}" +
+        forkSites.take(3).map { case (k, n) => s" $k=$n" }.mkString)
       val top = samples.asScala.toSeq.sortBy(-_._2).take(18)
       top.foreach { case (sig, n) => println(f"   ${n * 10}%6dms  $sig") }
       var prevEnd = -1L

@@ -8,10 +8,13 @@ import org.apache.spark.sql.SparkSession
   * one you'd want on a real cluster too: AQE on (runtime re-plan, skew-join
   * handling, partition coalescing), shuffle partitions sized to parallelism
   * (overridden by AQE at scale), UTC session time, nanos-as-long so
-  * TIMESTAMP(NANOS) parquet is readable.
+  * TIMESTAMP(NANOS) parquet is readable, and `file:` paths served by
+  * [[ForkFreeLocalFileSystem]] / [[ForkFreeLocalFs]] (stock Hadoop forks a
+  * process per local create, mkdir and FileContext rename).
   */
 object Sessions {
-  def builder(master: String, cpus: Int): SparkSession.Builder =
+  def builder(master: String, cpus: Int): SparkSession.Builder = {
+    ForkFreeLocalFs.replaceCachedStockFs()
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -28,6 +31,9 @@ object Sessions {
       // generated methods (multi-aggregate stages)
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
+  }
 
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

@@ -54,6 +54,14 @@ object DeltaWrite {
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** The parquet part files a Spark write left in `dir`, by name. A
+    * listStatus, not listFiles: LocatedFileStatus copies each file's
+    * permission, which the local filesystem reads by running `ls`. */
+  private def parquetParts(f: FileSystem, dir: Path): Seq[Path] =
+    f.listStatus(dir).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath).sortBy(_.getName)
+
   // ----------------------------------------------- writer capability gate
 
   /** Writer features this engine implements under `minWriterVersion` 7.
@@ -1770,7 +1778,7 @@ object DeltaWrite {
         else {
           val uuid = java.util.UUID.randomUUID()
           val (blob, offsets) = DeletionVectors.frameBinFile(filed.map(_._2))
-          val out = LocalIo.create(f, new Path(table, s"deletion_vector_$uuid.bin"), false)
+          val out = f.create(new Path(table, s"deletion_vector_$uuid.bin"), false)
           try out.write(blob) finally out.close()
           filed.zip(offsets).map { case ((a, bytes, card), off) =>
             a -> DeletionVectors.uuidDescriptorJson(uuid, off, bytes.length, card)
@@ -3105,17 +3113,8 @@ object DeltaWrite {
     val f = fs(spark, table)
     val tmp = new Path(logDir(table), s".cp-tmp-${java.util.UUID.randomUUID()}")
     out.write.parquet(tmp.toString)
-    val parts = {
-      val it = f.listFiles(tmp, false)
-      val found = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && s.getPath.getName.endsWith(".parquet")) found += s.getPath
-      }
-      val r = found.result().sortBy(_.getName)
-      require(r.nonEmpty, s"checkpoint write produced no parquet part in $tmp")
-      r
-    }
+    val parts = parquetParts(f, tmp)
+    require(parts.nonEmpty, s"checkpoint write produced no parquet part in $tmp")
     // idempotent re-checkpoint: clear any prior checkpoint files of this
     // version (single- or multi-part) before publishing
     val CpName = (f"${snap.version}%020d" + """\.checkpoint(\..*)?\.parquet""").r
@@ -3138,7 +3137,7 @@ object DeltaWrite {
     lc.put("version", snap.version)
     lc.put("size", metaRows.length.toLong + nFiles)
     if (parts.size > 1) lc.put("parts", parts.size)
-    val outLc = LocalIo.create(f, new Path(logDir(table), "_last_checkpoint"), true)
+    val outLc = f.create(new Path(logDir(table), "_last_checkpoint"), true)
     try outLc.write(mapper.writeValueAsBytes(lc)) finally outLc.close()
     snap.version
   }
@@ -3213,15 +3212,7 @@ object DeltaWrite {
           .write.parquet(tmp.toString)
         val sidecarDir = new Path(logDir(table), "_sidecars")
         f.mkdirs(sidecarDir)
-        val parts = {
-          val it = f.listFiles(tmp, false)
-          val found = Seq.newBuilder[Path]
-          while (it.hasNext) {
-            val s = it.next()
-            if (s.isFile && s.getPath.getName.endsWith(".parquet")) found += s.getPath
-          }
-          found.result().sortBy(_.getName)
-        }
+        val parts = parquetParts(f, tmp)
         require(parts.nonEmpty, s"sidecar write produced no parquet part in $tmp")
         val out = parts.zipWithIndex.map { case (src, i) =>
           // fresh uuid-based names: sidecars are immutable and shared
@@ -3299,7 +3290,7 @@ object DeltaWrite {
         lines += mapper.writeValueAsString(sn)
       }
       val tmpManifest = new Path(logDir(table), s".tmp-manifest-$uuid")
-      val out = LocalIo.create(f, tmpManifest, false)
+      val out = f.create(tmpManifest, false)
       try out.write(lines.result().mkString("", "\n", "\n").getBytes("UTF-8"))
       finally out.close()
       if (!f.rename(tmpManifest, manifestPath))
@@ -3367,16 +3358,8 @@ object DeltaWrite {
         spark.sparkContext.parallelize(rows, 1), manifestSchema)
       val tmpManifest = new Path(logDir(table), s".tmp-manifest-$uuid")
       manifestDf.coalesce(1).write.parquet(tmpManifest.toString)
-      val part = {
-        val it = f.listFiles(tmpManifest, false)
-        var found: Option[Path] = None
-        while (it.hasNext && found.isEmpty) {
-          val s = it.next()
-          if (s.isFile && s.getPath.getName.endsWith(".parquet")) found = Some(s.getPath)
-        }
-        found.getOrElse(throw new IllegalStateException(
-          s"manifest write produced no parquet part in $tmpManifest"))
-      }
+      val part = parquetParts(f, tmpManifest).headOption.getOrElse(
+        throw new IllegalStateException(s"manifest write produced no parquet part in $tmpManifest"))
       if (!f.rename(part, manifestPath))
         throw new IllegalStateException(s"Failed to publish manifest $manifestPath")
       f.delete(tmpManifest, true)
@@ -3400,7 +3383,7 @@ object DeltaWrite {
       3L + snap.txns.size + snap.domainMetadata.size + sidecars.size)
     lc.put("sizeInBytes", sidecars.map(_._2).sum)
     lc.put("numOfAddFiles", nFiles)
-    val outLc = LocalIo.create(f, new Path(logDir(table), "_last_checkpoint"), true)
+    val outLc = f.create(new Path(logDir(table), "_last_checkpoint"), true)
     try outLc.write(mapper.writeValueAsBytes(lc)) finally outLc.close()
     snap.version
   }
@@ -4373,7 +4356,7 @@ object DeltaWrite {
     // winner — so an existing target can only be our own earlier partial
     // attempt, safe to replace.
     val tmp = new Path(logDir(table), s".tmp-crc-${java.util.UUID.randomUUID()}")
-    val out = LocalIo.create(f, tmp, false)
+    val out = f.create(tmp, false)
     try out.write((mapper.writeValueAsString(n) + "\n").getBytes("UTF-8"))
     finally out.close()
     if (f.exists(target)) f.delete(target, false)
@@ -4434,7 +4417,7 @@ object DeltaWrite {
     val target = commitPath(table, version)
     val bytes = content.getBytes("UTF-8")
     val tmp = new Path(logDir(table), s".tmp-${java.util.UUID.randomUUID()}")
-    val out = LocalIo.create(f, tmp, false)
+    val out = f.create(tmp, false)
     try out.write(bytes) finally out.close()
     val won =
       if (f.getUri.getScheme == "file") {

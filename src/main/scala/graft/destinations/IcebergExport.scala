@@ -489,7 +489,7 @@ object IcebergExport {
     mw.setMeta("schema", schemaNode.toString)
     mw.setMeta("partition-spec", specNode.get("fields").toString)
     mw.setMeta("partition-spec-id", "0")
-    mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
+    mw.create(entrySchema, fs.create(manifestPath, true))
     try {
       snap.files.sortBy(_.path).foreach { a =>
         val rc = a.stats.flatMap(s =>
@@ -552,7 +552,7 @@ object IcebergExport {
       dw.setMeta("schema", schemaNode.toString)
       dw.setMeta("partition-spec", specNode.get("fields").toString)
       dw.setMeta("partition-spec-id", "0")
-      dw.create(entrySchema, LocalIo.create(fs, dmPath, true))
+      dw.create(entrySchema, fs.create(dmPath, true))
       try {
         dvFiles.foreach { a =>
           val d = graft.sources.DeletionVectors.parse(a.deletionVector.get)
@@ -594,7 +594,7 @@ object IcebergExport {
     lw.setMeta("format-version", "2")
     lw.setMeta("snapshot-id", snapshotId.toString)
     lw.setMeta("sequence-number", sequence.toString)
-    lw.create(manifestFileSchema, LocalIo.create(fs, listPath, true))
+    lw.create(manifestFileSchema, fs.create(listPath, true))
     try {
       val m = new GenericData.Record(manifestFileSchema)
       m.put("manifest_path", manifestPath.toString)
@@ -691,9 +691,9 @@ object IcebergExport {
     md.putArray("metadata-log")
 
     val mdPath = new Path(metaDir, s"v$version.metadata.json")
-    val out = LocalIo.create(fs, mdPath, true)
+    val out = fs.create(mdPath, true)
     try out.write(md.toString.getBytes("UTF-8")) finally out.close()
-    val hint = LocalIo.create(fs, new Path(metaDir, "version-hint.text"), true)
+    val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
     try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
     version
   }

@@ -113,7 +113,7 @@ object IcebergForeignTypesFixture {
       val partSchema = dfSchema.getField("partition").schema()
       val w = new DataFileWriter[GenericRecord](
         new GenericDatumWriter[GenericRecord](entrySchema))
-      w.create(entrySchema, LocalIo.create(fs, target, true))
+      w.create(entrySchema, fs.create(target, true))
       try entries.foreach { case (path, content, rc, seq, eqIds) =>
         val df = new GenericData.Record(dfSchema)
         df.put("content", content)
@@ -140,7 +140,7 @@ object IcebergForeignTypesFixture {
         target: Path, manifests: Seq[(Path, Long, Int, Long)]): Unit = {
       val w = new DataFileWriter[GenericRecord](
         new GenericDatumWriter[GenericRecord](IcebergExport.manifestFileSchema))
-      w.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, target, true))
+      w.create(IcebergExport.manifestFileSchema, fs.create(target, true))
       try manifests.foreach { case (p, len, content, seq) =>
         val m = new GenericData.Record(IcebergExport.manifestFileSchema)
         m.put("manifest_path", p.toString)
@@ -196,7 +196,7 @@ object IcebergForeignTypesFixture {
          |  {"timestamp-ms":1700000000000,"snapshot-id":1},
          |  {"timestamp-ms":1700000100000,"snapshot-id":2}],
          |"metadata-log":[]}""".stripMargin
-    val out = LocalIo.create(fs, new Path(metaDir, "v1.metadata.json"), true)
+    val out = fs.create(new Path(metaDir, "v1.metadata.json"), true)
     try out.write(md.getBytes("UTF-8")) finally out.close()
   }
 }

@@ -124,7 +124,7 @@ object IcebergV1Fixture {
       mw.setMeta("schema", schemaNode.toString)
       mw.setMeta("partition-spec", "[]")
       mw.setMeta("partition-spec-id", "0")
-      mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
+      mw.create(entrySchema, fs.create(manifestPath, true))
       try moved.foreach { case (p, rc, len) =>
         val d = new GenericData.Record(dfSchema)
         d.put("file_path", p.toString)
@@ -163,7 +163,7 @@ object IcebergV1Fixture {
           new GenericDatumWriter[GenericRecord](listSchema))
         lw.setMeta("format-version", "1")
         lw.setMeta("snapshot-id", snapshotId.toString)
-        lw.create(listSchema, LocalIo.create(fs, listPath, true))
+        lw.create(listSchema, fs.create(listPath, true))
         try manifests.result().foreach { case (mp, len, sid, n) =>
           val m = new GenericData.Record(listSchema)
           m.put("manifest_path", mp.toString)
@@ -199,7 +199,7 @@ object IcebergV1Fixture {
       snapNodes.result().foreach(snaps.add)
       val slog = md.putArray("snapshot-log")
       logNodes.result().foreach(slog.add)
-      val out = LocalIo.create(fs, new Path(metaDir, s"v${i + 1}.metadata.json"), true)
+      val out = fs.create(new Path(metaDir, s"v${i + 1}.metadata.json"), true)
       try out.write(md.toString.getBytes("UTF-8")) finally out.close()
     }
     snapIds.result()

@@ -180,7 +180,7 @@ object IcebergV3Fixture {
       props.put("cardinality", deletedPositions.size.toString)
       footer.putObject("properties")
       val payload = footer.toString.getBytes("UTF-8")
-      val out = LocalIo.create(fs, dvFile, true)
+      val out = fs.create(dvFile, true)
       try {
         out.write(puffinMagic)
         out.write(blob)
@@ -206,7 +206,7 @@ object IcebergV3Fixture {
       val dfSchema = entrySchema.getField("data_file").schema()
       val w = new DataFileWriter[GenericRecord](
         new GenericDatumWriter[GenericRecord](entrySchema))
-      w.create(entrySchema, LocalIo.create(fs, target, true))
+      w.create(entrySchema, fs.create(target, true))
       try {
         val d = new GenericData.Record(dfSchema)
         d.put("content", content)
@@ -237,7 +237,7 @@ object IcebergV3Fixture {
         target: Path, manifests: Seq[(Path, Long, Int, Long)]): Unit = {
       val w = new DataFileWriter[GenericRecord](
         new GenericDatumWriter[GenericRecord](IcebergExport.manifestFileSchema))
-      w.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, target, true))
+      w.create(IcebergExport.manifestFileSchema, fs.create(target, true))
       try manifests.foreach { case (p, len, content, seq) =>
         val m = new GenericData.Record(IcebergExport.manifestFileSchema)
         m.put("manifest_path", p.toString)
@@ -295,7 +295,7 @@ object IcebergV3Fixture {
          |  {"timestamp-ms":1700000000000,"snapshot-id":1}${
             if (withDv) ""","""+"\n"+"""  {"timestamp-ms":1700000100000,"snapshot-id":2}""" else ""}],
          |"metadata-log":[]}""".stripMargin
-    val out = LocalIo.create(fs, new Path(metaDir, "v1.metadata.json"), true)
+    val out = fs.create(new Path(metaDir, "v1.metadata.json"), true)
     try out.write(md.getBytes("UTF-8")) finally out.close()
   }
 }

@@ -555,7 +555,7 @@ object IcebergWrite {
       new GenericDatumWriter[GenericRecord](entrySchema))
     mw.setMeta("format-version", fv.toString)
     mw.setMeta("content", "deletes")
-    mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
+    mw.create(entrySchema, fs.create(manifestPath, true))
     try {
       val d = new GenericData.Record(dfSchema)
       d.put("content", 2) // EQUALITY_DELETES
@@ -848,7 +848,7 @@ object IcebergWrite {
     mw.setMeta("schema", schemaNode.toString)
     mw.setMeta("partition-spec", specNode.get("fields").toString)
     mw.setMeta("partition-spec-id", specId.toString)
-    mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
+    mw.create(entrySchema, fs.create(manifestPath, true))
     // v3 row lineage: each data file's first_row_id assigns sequentially
     // from the metadata's next-row-id (rewrites materialize per-row ids
     // into the files instead and consume none)
@@ -925,7 +925,7 @@ object IcebergWrite {
     lw.setMeta("format-version", fv.toString)
     lw.setMeta("snapshot-id", snapshotId.toString)
     lw.setMeta("sequence-number", sequence.toString)
-    lw.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, listPath, true))
+    lw.create(IcebergExport.manifestFileSchema, fs.create(listPath, true))
     var overwriteDropped = (0L, 0L) // (files, rows) replaced by the overwrite
     try {
       if (carryPrior) {
@@ -1116,7 +1116,7 @@ object IcebergWrite {
     lw.setMeta("format-version", "2")
     lw.setMeta("snapshot-id", snapshotId.toString)
     lw.setMeta("sequence-number", sequence.toString)
-    lw.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, listPath, true))
+    lw.create(IcebergExport.manifestFileSchema, fs.create(listPath, true))
     try {
       carryPriorManifests(lw, md, conf)
       val m = new GenericData.Record(IcebergExport.manifestFileSchema)
@@ -1319,7 +1319,7 @@ object IcebergWrite {
       new GenericDatumWriter[GenericRecord](entrySchema))
     mw.setMeta("format-version", "2")
     mw.setMeta("content", "deletes")
-    mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
+    mw.create(entrySchema, fs.create(manifestPath, true))
     try {
       val d = new GenericData.Record(dfSchema)
       d.put("content", 1) // POSITION_DELETES
@@ -1348,7 +1348,7 @@ object IcebergWrite {
     lw.setMeta("format-version", "2")
     lw.setMeta("snapshot-id", snapshotId.toString)
     lw.setMeta("sequence-number", sequence.toString)
-    lw.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, listPath, true))
+    lw.create(IcebergExport.manifestFileSchema, fs.create(listPath, true))
     try {
       carryPriorManifestsDroppingDeletes(lw, md, conf, metaDir,
         doomed = { e =>
@@ -1558,7 +1558,7 @@ object IcebergWrite {
       }
       footer.putObject("properties")
       val payload = footer.toString.getBytes("UTF-8")
-      val out = LocalIo.create(fs, puffinPath, true)
+      val out = fs.create(puffinPath, true)
       try {
         out.write(puffinMagic)
         perFile.foreach { case (_, bytes, _, _) =>
@@ -1587,7 +1587,7 @@ object IcebergWrite {
       new GenericDatumWriter[GenericRecord](entrySchema))
     mw.setMeta("format-version", "3")
     mw.setMeta("content", "deletes")
-    mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
+    mw.create(entrySchema, fs.create(manifestPath, true))
     val totalCard = blobMeta.map(_._4).sum
     try blobMeta.foreach { case (n, off, size, card) =>
       val d = new GenericData.Record(dfSchema)
@@ -1623,7 +1623,7 @@ object IcebergWrite {
     lw.setMeta("format-version", "3")
     lw.setMeta("snapshot-id", snapshotId.toString)
     lw.setMeta("sequence-number", sequence.toString)
-    lw.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, listPath, true))
+    lw.create(IcebergExport.manifestFileSchema, fs.create(listPath, true))
     try {
       carryPriorManifestsDroppingDeletes(lw, md, conf, metaDir,
         doomed = { e =>
@@ -1755,7 +1755,7 @@ object IcebergWrite {
             val mw = new DataFileWriter[GenericRecord](
               new GenericDatumWriter[GenericRecord](entrySchema))
             metas.foreach { case (k, v) => mw.setMeta(k, v) }
-            mw.create(entrySchema, LocalIo.create(fsm, newPath, true))
+            mw.create(entrySchema, fsm.create(newPath, true))
             val inheritedSeq = rec.get("sequence_number") match {
               case l: java.lang.Long => l.longValue()
               case i: java.lang.Integer => i.longValue()
@@ -2033,7 +2033,7 @@ object IcebergWrite {
             val mw = new DataFileWriter[GenericRecord](
               new GenericDatumWriter[GenericRecord](entrySchema))
             metas.foreach { case (k, v) => mw.setMeta(k, v) }
-            mw.create(entrySchema, LocalIo.create(fsm, newPath, true))
+            mw.create(entrySchema, fsm.create(newPath, true))
             // foreign writers leave seq/snapshot NULL on ADDED entries
             // (inherited from the list record); the spec allows that
             // only for ADDED, and the rewritten list record's
@@ -2234,9 +2234,13 @@ object IcebergWrite {
               val dp = new Path(d)
               val dfs = dp.getFileSystem(c)
               val out = scala.collection.mutable.ArrayBuffer.empty[String]
-              val walk = dfs.listFiles(dp, true)
-              while (walk.hasNext) {
-                val st = walk.next()
+              // a listStatus walk, not listFiles: LocatedFileStatus copies
+              // each file's permission, which the local filesystem reads
+              // by running `ls` once per file
+              def walk(dir: Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+                dfs.listStatus(dir).iterator.flatMap(st =>
+                  if (st.isDirectory) walk(st.getPath) else Iterator(st))
+              walk(dp).foreach { st =>
                 val p = dfs.makeQualified(st.getPath).toString
                 val rel = p.stripPrefix(root).dropWhile(_ == '/')
                 val hidden = rel.split('/')
@@ -2594,9 +2598,9 @@ object IcebergWrite {
   private def writeMetadata(
       fs: org.apache.hadoop.fs.FileSystem, metaDir: Path,
       version: Int, md: ObjectNode): Unit = {
-    val out = LocalIo.create(fs, new Path(metaDir, s"v$version.metadata.json"), true)
+    val out = fs.create(new Path(metaDir, s"v$version.metadata.json"), true)
     try out.write(md.toString.getBytes("UTF-8")) finally out.close()
-    val hint = LocalIo.create(fs, new Path(metaDir, "version-hint.text"), true)
+    val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
     try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
   }
 }

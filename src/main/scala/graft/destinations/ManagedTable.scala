@@ -102,7 +102,7 @@ object ManagedTable {
     val fl = node.putArray("files"); c.files.foreach(fl.add)
     val pr = node.putObject("properties"); c.properties.foreach { case (k, v) => pr.put(k, v) }
     val tmp = new Path(logDir(root), s".tmp-${java.util.UUID.randomUUID()}")
-    val out = LocalIo.create(f, tmp, false)
+    val out = f.create(tmp, false)
     try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
     finally out.close()
     val target = commitPath(root, c.version)

@@ -131,11 +131,11 @@ private[graft] object QueryHelpers {
     *     Spark 4.1's checksummed checkpoint manager doubles every WAL op
     *     (offset log, commit log, state-store delta: temp file + rename,
     *     TWICE) to detect storage corruption that cannot matter for a
-    *     same-process, same-disk temp file. Profiled: the checksum
-    *     manager's create/rename threads carry ~25% of the per-trigger
-    *     driver wall on the join gates; measured −9% across the streaming
-    *     block. Durable production checkpoints (object stores) should keep
-    *     Spark's default — set `spark.graft.stream.checkpointFileChecksum`
+    *     same-process, same-disk temp file. Even with the fork-free local
+    *     filesystem, turning the checksums on costs +3% to +16% per gate
+    *     on q121/q133/q146/q150 (+10% together; sf0.1, 4 cores, min of
+    *     two runs a side). Durable production checkpoints (object stores)
+    *     should keep Spark's default — set `spark.graft.stream.checkpointFileChecksum`
     *     (default false here) to true to restore it.
     *
     * The reroutes are data-size dispatches with the large side identical
@@ -165,18 +165,10 @@ private[graft] object QueryHelpers {
     val interpret = exprOnly && inputBytes < cgMin
     val ckOn = s.conf.getOption("spark.graft.stream.checkpointFileChecksum")
       .exists(_.toBoolean)
-    // NIO checkpoint manager (r19): local checkpoint WAL + state-store
-    // files skip Hadoop's forking local-FS shims; non-local schemes
-    // delegate to Spark's default inside the manager itself. Override:
-    // spark.sql.streaming.checkpointFileManagerClass (set = respected).
-    val cfmKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val cfm =
-      if (s.conf.getOption(cfmKey).isDefined) Nil
-      else Seq(cfmKey -> classOf[graft.streaming.NioCheckpointFileManager].getName)
     val cgKeys = (if (interpret)
       Seq("spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    else Nil) ++ cfm ++
+    else Nil) ++
       (if (ckOn) Nil
       else Seq("spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false"))
     val cgPrev = cgKeys.map { case (k, _) => k -> s.conf.getOption(k) }
